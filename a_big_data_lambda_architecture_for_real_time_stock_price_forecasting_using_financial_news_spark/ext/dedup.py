@@ -184,11 +184,6 @@ def _sig_mins_sql() -> str:
     )
 
 
-def shingle_hashes_sql(expr: str) -> str:
-    sh = shingles_sql(expr)
-    return f"(SELECT list_transform(sh, s -> {phash60_sql('s')}) FROM (SELECT {sh} AS sh))"
-
-
 def minhash_signature_sql(expr: str) -> str:
     sh = shingles_sql(expr)
     # bind hs in a subquery: DuckDB inlines repeated aliases too, and 16
@@ -652,11 +647,6 @@ def char_ngrams_of_norm(s, n: int = NGRAM_N):
         ln >= n,
         F.array_distinct(F.transform(idx, lambda i: s.substr(i, F.lit(n)))),
     ).otherwise(F.array().cast("array<string>"))
-
-
-def char_ngrams(col, n: int = NGRAM_N):
-    """Char n-grams straight from raw text — for small inputs and tests."""
-    return char_ngrams_of_norm(norm_text(col), n)
 
 
 def char_ngrams_sql(expr: str, n: int = NGRAM_N) -> str:

@@ -40,11 +40,6 @@ def phash60_sql(expr: str, seed: str = "") -> str:
     return f"CAST(concat('0x', md5({s})[1:15]) AS BIGINT)"
 
 
-def phash_lambda_sql(var: str, seed: str = "") -> str:
-    """Same as phash60_sql but for use inside a DuckDB list lambda."""
-    return phash60_sql(var, seed)
-
-
 def fp_step_mod(col: Column) -> Column:
     """Per-token term of the rolling fingerprint, reduced mod FP_MOD."""
     return phash60(col) % F.lit(FP_MOD)

@@ -11,6 +11,7 @@ from ..ext import export as _ex
 from ..ext import similarity as _sim
 from ..ext import text as _tx
 from ..session import prepare
+from ..streaming.replay import isolated_session, run_to_memory
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from .registry_base import DEC, bucket_count, dec2dbl, register, scratch_dir, tbl
@@ -214,43 +215,27 @@ def t15_stream_windowed_topk(spark, sf_dir):
     oracle applies the same cutoff. State per key is one (window, type)
     count, dropped at finalization — bounded by ACTIVE windows, the
     append-mode guarantee that holds at any scale."""
-    import uuid
-
     from pyspark.sql import Window
 
     from ..streaming.ingest import events_stream
 
-    prepare(spark)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    sink = f"t15_sink_{uuid.uuid4().hex[:8]}"
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        agg = (
-            events_stream(spark, sf_dir, single_batch=True)
-            .withWatermark("ts", "0 seconds")
-            .groupBy(F.window("ts", "1 day").alias("win"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(
-                F.col("win.start").alias("window_start"),
-                "event_type",
-                "n_events",
-            )
+    child = isolated_session(prepare(spark))
+    agg = (
+        events_stream(child, sf_dir, single_batch=True)
+        .withWatermark("ts", "0 seconds")
+        .groupBy(F.window("ts", "1 day").alias("win"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(
+            F.col("win.start").alias("window_start"),
+            "event_type",
+            "n_events",
         )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    )
     w = Window.partitionBy("window_start").orderBy(
         F.desc("n_events"), F.asc("event_type")
     )
     return (
-        spark.table(sink)
+        run_to_memory(agg)
         .withColumn("rnk", F.row_number().over(w).cast("int"))
         .filter(F.col("rnk") <= 3)
         .select("window_start", "event_type", "n_events", "rnk")
@@ -1345,34 +1330,17 @@ def t16_stream_dedup_within_watermark(spark, sf_dir):
 
     Only the key columns survive to the sink, so the result is
     deterministic regardless of which physical duplicate row wins."""
-    import uuid
-
     from ..streaming.ingest import events_stream
 
-    prepare(spark)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    sink = f"t16_sink_{uuid.uuid4().hex[:8]}"
-    try:
-        # inside the try (t13's pattern) so any failure restores the conf
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        dedup = (
-            events_stream(spark, sf_dir, n_chunks=2)
-            .select("user_id", "event_type", "ts")
-            .withWatermark("ts", "3650 days")
-            .dropDuplicatesWithinWatermark(["user_id", "event_type"])
-            .select("user_id", "event_type")
-        )
-        q = (
-            dedup.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(sink)
+    child = isolated_session(prepare(spark))
+    dedup = (
+        events_stream(child, sf_dir, n_chunks=2)
+        .select("user_id", "event_type", "ts")
+        .withWatermark("ts", "3650 days")
+        .dropDuplicatesWithinWatermark(["user_id", "event_type"])
+        .select("user_id", "event_type")
+    )
+    return run_to_memory(dedup)
 
 
 @register(

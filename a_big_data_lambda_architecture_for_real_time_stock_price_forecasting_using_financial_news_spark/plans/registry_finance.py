@@ -10,6 +10,7 @@ from ..ext import export as _ex
 from ..ext import text as _tx
 from ..ext.hashing import phash60, phash60_sql
 from ..session import prepare
+from ..streaming.replay import run_foreach_batch
 from pyspark.sql import functions as F
 from .registry_base import ORACLES, register, scratch_dir, tbl
 from .registry_corpus import _cooccur_graph_bucketed, _split_col, _split_sql
@@ -1144,18 +1145,13 @@ def t25_stream_bitmap_view(spark, sf_dir):
             )
         )
 
-    q = (
+    run_foreach_batch(
         spark.readStream.schema(spark.read.parquet(stage).schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .writeStream.foreachBatch(
-            lambda b, bid: view.merge_custom(b, fn, batch_id=bid, writer="bm")
-        )
-        .option("checkpointLocation", _os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .parquet(stage),
+        lambda b, bid: view.merge_custom(b, fn, batch_id=bid, writer="bm"),
+        _os.path.join(root, "ckpt"),
     )
-    q.awaitTermination()
     words = view.read()
     s = words.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_words"),
@@ -1724,18 +1720,13 @@ def t26_stream_kmv_view(spark, sf_dir):
             return topk(delta)
         return topk(cur.select("event_type", "h").unionByName(delta).distinct())
 
-    q = (
+    run_foreach_batch(
         spark.readStream.schema(spark.read.parquet(stage).schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .writeStream.foreachBatch(
-            lambda b, bid: view.merge_custom(b, fn, batch_id=bid, writer="kmv")
-        )
-        .option("checkpointLocation", _os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .parquet(stage),
+        lambda b, bid: view.merge_custom(b, fn, batch_id=bid, writer="kmv"),
+        _os.path.join(root, "ckpt"),
     )
-    q.awaitTermination()
     sk = view.read()
     s = sk.groupBy("event_type").agg(
         F.max("h").cast("bigint").alias("hk"),

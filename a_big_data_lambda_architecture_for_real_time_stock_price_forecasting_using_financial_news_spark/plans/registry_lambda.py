@@ -12,6 +12,7 @@ from ..ext import text as _tx
 from ..ml import infer as _inf
 from ..plans.batch_pipeline import DEFAULT_AS_OF, build_batch_view, flagship, parse_props
 from ..session import prepare
+from ..streaming.replay import run_foreach_batch
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from .registry_base import DEC, bucket_count, dec2dbl, register, scratch_dir, tbl
@@ -112,13 +113,7 @@ def t17_lambda_convergence(spark, sf_dir):
             daily_ohlc_state(batch_df), batch_id=batch_id, writer="stock"
         )
 
-    q = (
-        stock_stream.writeStream.foreachBatch(stock_sink)
-        .option("checkpointLocation", _os.path.join(root, "ckpt_stock"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_foreach_batch(stock_stream, stock_sink, _os.path.join(root, "ckpt_stock"))
 
     news_stream = (
         events_stream(spark, sf_dir, n_chunks=3)
@@ -140,13 +135,7 @@ def t17_lambda_convergence(spark, sf_dir):
             writer="news",
         )
 
-    q = (
-        news_stream.writeStream.foreachBatch(news_sink)
-        .option("checkpointLocation", _os.path.join(root, "ckpt_news"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_foreach_batch(news_stream, news_sink, _os.path.join(root, "ckpt_news"))
 
     speed = view.read()
     # a one-sided feed (a corpus with only trades, or only news) leaves the
@@ -879,16 +868,13 @@ def t18_stream_scd2(spark, sf_dir):
         b = batch_df.withColumn("pb", F.pmod(F.col("custkey"), F.lit(16)))
         view.merge_custom(b, fn, batch_id=batch_id, writer="scd2")
 
-    q = (
+    run_foreach_batch(
         spark.readStream.schema(spark.read.parquet(stage).schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", _os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .parquet(stage),
+        sink,
+        _os.path.join(root, "ckpt"),
     )
-    q.awaitTermination()
     dim = view.read()
     if dim is None:
         # no order matched the tracked-customer predicate (possible on a
@@ -1652,16 +1638,13 @@ def t20_stream_agg_view(spark, sf_dir):
         b = batch_df.withColumn("pb", F.pmod(F.xxhash64("ym"), F.lit(8)))
         view.merge_custom(b, fn, batch_id=batch_id, writer="aggmv")
 
-    q = (
+    run_foreach_batch(
         spark.readStream.schema(spark.read.parquet(stage).schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", _os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .parquet(stage),
+        sink,
+        _os.path.join(root, "ckpt"),
     )
-    q.awaitTermination()
     return view.read().select(
         "ym",
         "priority",

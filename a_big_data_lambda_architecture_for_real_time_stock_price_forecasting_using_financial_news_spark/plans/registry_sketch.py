@@ -13,6 +13,7 @@ from ..ext import similarity as _sim2
 from ..ext import text as _tx
 from ..ml import infer as _inf
 from ..session import prepare
+from ..streaming.replay import run_foreach_batch
 from pyspark.sql import functions as F
 from .registry_base import DEC, ORACLES, dec2dbl, register, scratch_dir, tbl
 from .registry_corpus import _cooccur_graph_bucketed
@@ -536,18 +537,13 @@ def t22_stream_hll_view(spark, sf_dir):
             )
         )
 
-    q = (
+    run_foreach_batch(
         spark.readStream.schema(spark.read.parquet(stage).schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .writeStream.foreachBatch(
-            lambda b, bid: view.merge_custom(b, fn, batch_id=bid, writer="hll")
-        )
-        .option("checkpointLocation", _os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .parquet(stage),
+        lambda b, bid: view.merge_custom(b, fn, batch_id=bid, writer="hll"),
+        _os.path.join(root, "ckpt"),
     )
-    q.awaitTermination()
     regs = view.read()
     s = regs.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("registers_used"),
@@ -1617,18 +1613,13 @@ def t23_stream_cms_view(spark, sf_dir):
             )
         )
 
-    q = (
+    run_foreach_batch(
         spark.readStream.schema(spark.read.parquet(stage).schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .writeStream.foreachBatch(
-            lambda b, bid: view.merge_custom(expand(b), fn, batch_id=bid, writer="cms")
-        )
-        .option("checkpointLocation", _os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .parquet(stage),
+        lambda b, bid: view.merge_custom(expand(b), fn, batch_id=bid, writer="cms"),
+        _os.path.join(root, "ckpt"),
     )
-    q.awaitTermination()
     sketch = view.read().select("i", "col", F.col("c").cast("bigint").alias("c"))
     staged = spark.read.parquet(stage)
     cand = expand(staged).distinct()
@@ -2840,18 +2831,13 @@ def t24_stream_erasure(spark, sf_dir):
         gone = b.select("user_id").distinct()
         return cur.join(gone, "user_id", "left_anti")
 
-    q = (
+    run_foreach_batch(
         spark.readStream.schema(spark.read.parquet(stage).schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .writeStream.foreachBatch(
-            lambda b, bid: view.merge_custom(b, erase, batch_id=bid, writer="erase")
-        )
-        .option("checkpointLocation", _os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .parquet(stage),
+        lambda b, bid: view.merge_custom(b, erase, batch_id=bid, writer="erase"),
+        _os.path.join(root, "ckpt"),
     )
-    q.awaitTermination()
     out = view.read()
     if out is None:
         # all users erased (u9's tiny-corpus arm): empty view, empty census

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from ..plans.batch_pipeline import DEFAULT_AS_OF, build_batch_view, flagship, parse_props
 from ..session import prepare
+from ..streaming.replay import isolated_session, run_to_memory
 from pyspark.sql import functions as F
 from .registry_base import DEC, dec2dbl, register, tbl
 
@@ -201,8 +202,6 @@ def t10_stream_topk(spark, sf_dir):
     as a stream; final state read back from the memory sink (max-n row
     per key). Ties make the VALUE multiset deterministic even though row
     ranks are not, so the windowed oracle matches exactly."""
-    import uuid
-
     from ..streaming.ingest import events_stream
     from ..streaming.state import running_topk_stream
 
@@ -211,17 +210,7 @@ def t10_stream_topk(spark, sf_dir):
         F.col("user_id").cast("string").alias("key"),
         F.col("value").cast("double").alias("v"),
     )
-    out = running_topk_stream(stream)
-    sink = f"t10_sink_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    tblu = spark.table(sink)
+    tblu = run_to_memory(running_topk_stream(stream), "update")
     packed = F.struct("n", "top1", "top2", "top3")
     return (
         tblu.groupBy("key")
@@ -252,8 +241,6 @@ def t6_stream_running_mean(spark, sf_dir):
     ``applyInPandasWithState`` (sum/count state per key, update mode), final
     state read back from the memory sink. The correct-mean replacement for
     the reference's ES-scripted sentiment state."""
-    import uuid
-
     from ..plans.batch_pipeline import parse_props as _pp
     from ..streaming.ingest import events_stream
     from ..streaming.state import running_mean_stream
@@ -263,18 +250,8 @@ def t6_stream_running_mean(spark, sf_dir):
         F.col("user_id").cast("string").alias("key"),
         F.col("k").cast("double").alias("v"),
     )
-    out = running_mean_stream(stream)
-    sink = f"t6_sink_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     # final state per key = the row with the highest n (monotone per key)
-    tblu = spark.table(sink)
+    tblu = run_to_memory(running_mean_stream(stream), "update")
     packed = F.struct("n", "sum_v", "mean_v")
     return (
         tblu.groupBy("key")
@@ -309,54 +286,35 @@ def t11_stream_stream_join(spark, sf_dir):
     exceeds the fixture's time span, so no row is dropped and the batch
     range-join oracle is the exact truth (late-data *dropping* semantics
     are pytest-gated separately in tests/test_streaming.py)."""
-    import uuid
-
     from ..streaming.ingest import events_stream
 
-    prepare(spark)
     # the stream-stream join's state store allocates one state partition
-    # per shuffle partition PER SIDE per micro-batch; at 200 session
-    # partitions that is thousands of tiny state files for a bounded
-    # replay — pin a small count for the streaming query, restore after
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    sink = f"t11_sink_{uuid.uuid4().hex[:8]}"
-    try:
-        # inside the try (t13's pattern) so a failure anywhere — including
-        # building the stream DataFrames — still restores the session conf
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        clicks = (
-            events_stream(spark, sf_dir, n_chunks=2)
-            .filter(F.col("event_type") == "click")
-            .select("user_id", F.col("event_id").alias("click_id"), F.col("ts").alias("a_ts"))
-            .withWatermark("a_ts", "3650 days")
+    # per shuffle partition PER SIDE per micro-batch: replay on a child
+    # session pinned to a small count
+    child = isolated_session(prepare(spark))
+    clicks = (
+        events_stream(child, sf_dir, n_chunks=2)
+        .filter(F.col("event_type") == "click")
+        .select("user_id", F.col("event_id").alias("click_id"), F.col("ts").alias("a_ts"))
+        .withWatermark("a_ts", "3650 days")
+    )
+    views = (
+        events_stream(child, sf_dir, n_chunks=2)
+        .filter(F.col("event_type") == "view")
+        .select(
+            F.col("user_id").alias("v_user"),
+            F.col("event_id").alias("view_id"),
+            F.col("ts").alias("b_ts"),
         )
-        views = (
-            events_stream(spark, sf_dir, n_chunks=2)
-            .filter(F.col("event_type") == "view")
-            .select(
-                F.col("user_id").alias("v_user"),
-                F.col("event_id").alias("view_id"),
-                F.col("ts").alias("b_ts"),
-            )
-            .withWatermark("b_ts", "3650 days")
-        )
-        joined = clicks.join(
-            views,
-            (F.col("user_id") == F.col("v_user"))
-            & (F.col("b_ts") >= F.col("a_ts") - F.expr("INTERVAL 10 MINUTES"))
-            & (F.col("b_ts") <= F.col("a_ts") + F.expr("INTERVAL 10 MINUTES")),
-        ).select("user_id", "click_id", "view_id")
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(sink)
+        .withWatermark("b_ts", "3650 days")
+    )
+    joined = clicks.join(
+        views,
+        (F.col("user_id") == F.col("v_user"))
+        & (F.col("b_ts") >= F.col("a_ts") - F.expr("INTERVAL 10 MINUTES"))
+        & (F.col("b_ts") <= F.col("a_ts") + F.expr("INTERVAL 10 MINUTES")),
+    ).select("user_id", "click_id", "view_id")
+    return run_to_memory(joined)
 
 
 @register(
@@ -374,8 +332,6 @@ def t12_stream_static_join(spark, sf_dir):
     side as a broadcast hash join inside every batch — the scale path for
     enriching an unbounded stream against a dimension table without any
     state store."""
-    import uuid
-
     from ..streaming.ingest import events_stream
 
     prepare(spark)
@@ -388,16 +344,7 @@ def t12_stream_static_join(spark, sf_dir):
         .join(cust, F.col("user_id") + 1 == F.col("c_custkey"))
         .select("event_id", "user_id", "c_name", "c_mktsegment")
     )
-    sink = f"t12_sink_{uuid.uuid4().hex[:8]}"
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return run_to_memory(enriched)
 
 
 @register(
@@ -414,33 +361,15 @@ def t13_stream_dedup(spark, sf_dir):
     production the same pipeline adds a watermark to bound state
     (dropDuplicatesWithinWatermark), pytest-covered in
     tests/test_streaming.py."""
-    import uuid
-
     from ..streaming.ingest import events_stream
 
-    prepare(spark)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    sink = f"t13_sink_{uuid.uuid4().hex[:8]}"
-    try:
-        # inside the try so a failure anywhere (including building the
-        # stream) still restores the session-wide partition count
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        dedup = (
-            events_stream(spark, sf_dir, n_chunks=2)
-            .select("user_id", "event_type")
-            .dropDuplicates(["user_id", "event_type"])
-        )
-        q = (
-            dedup.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(sink)
+    child = isolated_session(prepare(spark))
+    dedup = (
+        events_stream(child, sf_dir, n_chunks=2)
+        .select("user_id", "event_type")
+        .dropDuplicates(["user_id", "event_type"])
+    )
+    return run_to_memory(dedup)
 
 
 @register(
@@ -474,8 +403,6 @@ def t14_stream_state_expiry(spark, sf_dir):
     whose last activity is > 12h before the stream's end — the HAVING-gated
     batch aggregate in the oracle. Users still active in the final 12h
     remain open (in state, unemitted) — expected session semantics."""
-    import uuid
-
     from ..streaming.ingest import events_stream
     from ..streaming.state import idle_session_close
 
@@ -489,18 +416,8 @@ def t14_stream_state_expiry(spark, sf_dir):
         )
         .withWatermark("ts", "2 hours")
     )
-    out = idle_session_close(stream, gap_ms=10 * 3600 * 1000)
-    sink = f"t14_sink_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     # each key emits at most once (state removed on expiry): sink == result
-    return spark.table(sink)
+    return run_to_memory(idle_session_close(stream, gap_ms=10 * 3600 * 1000))
 
 
 # The Spark 4 typed-state successor API (transformWithStateInPandas) lives

@@ -12,6 +12,7 @@ from ..ext import similarity as _sim
 from ..ext import text as _tx
 from ..ext.hashing import phash60, phash60_sql
 from ..session import prepare
+from ..streaming.replay import run_foreach_batch
 from pyspark.sql import functions as F
 from .registry_base import DEC, register, scratch_dir, tbl
 from .registry_corpus import _split_col, _split_sql
@@ -853,16 +854,13 @@ def t27_stream_gram_view(spark, sf_dir):
         )
         view.merge_custom(g, fn, batch_id=batch_id, writer="grammv")
 
-    q = (
+    run_foreach_batch(
         spark.readStream.schema(spark.read.parquet(stage).schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", _os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .parquet(stage),
+        sink,
+        _os.path.join(root, "ckpt"),
     )
-    q.awaitTermination()
     return view.read().select("i", "j", "dot")
 
 
@@ -1761,18 +1759,13 @@ def t28_stream_histogram_view(spark, sf_dir):
             )
         )
 
-    q = (
+    run_foreach_batch(
         spark.readStream.schema(spark.read.parquet(stage).schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .writeStream.foreachBatch(
-            lambda b, bid: view.merge_custom(b, fn, batch_id=bid, writer="hist")
-        )
-        .option("checkpointLocation", _os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .parquet(stage),
+        lambda b, bid: view.merge_custom(b, fn, batch_id=bid, writer="hist"),
+        _os.path.join(root, "ckpt"),
     )
-    q.awaitTermination()
     from pyspark.sql import Window
 
     hist = view.read()
@@ -1893,18 +1886,13 @@ def t29_stream_minhash_view(spark, sf_dir):
             )
         )
 
-    q = (
+    run_foreach_batch(
         spark.readStream.schema(spark.read.parquet(stage).schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .writeStream.foreachBatch(
-            lambda b, bid: view.merge_custom(b, fn, batch_id=bid, writer="mh")
-        )
-        .option("checkpointLocation", _os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .parquet(stage),
+        lambda b, bid: view.merge_custom(b, fn, batch_id=bid, writer="mh"),
+        _os.path.join(root, "ckpt"),
     )
-    q.awaitTermination()
     per = view.read()
     if per is None:
         # every document was too short to shingle: the view holds no
@@ -2765,16 +2753,13 @@ def t30_stream_substring_view(spark, sf_dir):
         delta.unpersist()
         new_fps.unpersist()
 
-    q = (
+    run_foreach_batch(
         spark.readStream.schema(spark.read.parquet(stage).schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", _os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .parquet(stage),
+        sink,
+        _os.path.join(root, "ckpt"),
     )
-    q.awaitTermination()
     final = spans_v.read()
     out_cols = ["doc_a", "doc_b", "start_a", "start_b", "n_chunks", "span_toks"]
     if final is None:
@@ -2895,16 +2880,13 @@ def t31_stream_semdedup_view(spark, sf_dir):
         )
         new_cells.unpersist()
 
-    q = (
+    run_foreach_batch(
         spark.readStream.schema(spark.read.parquet(stage).schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", _os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .parquet(stage),
+        sink,
+        _os.path.join(root, "ckpt"),
     )
-    q.awaitTermination()
     cells = cells_v.read()
     if cells is None:
         return spark.createDataFrame(

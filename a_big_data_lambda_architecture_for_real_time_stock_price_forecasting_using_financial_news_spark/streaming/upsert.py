@@ -808,14 +808,3 @@ def foreach_batch_lww(view: KeyedParquetView, order_col: str, writer: str = "def
         view.merge_overwrite_by_key(batch_df, order_col, batch_id=batch_id, writer=writer)
 
     return fn
-
-
-def foreach_batch_halves(
-    view: KeyedParquetView, half_cols: list[str], writer: str = "default"
-):
-    """K4/K5 sink: column-half upsert."""
-
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        view.merge_column_halves(batch_df, half_cols, batch_id=batch_id, writer=writer)
-
-    return fn

@@ -50,9 +50,11 @@ def _fuzz_tmp(tmp_path_factory) -> str:
 
 def _stage(spark, tmp, name, rows, schema):
     path = os.path.join(tmp, f"{name}.parquet")
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(path)
+    # One slice, so one file. Local rows pass through a Python worker once
+    # per slice; coalesce(1) over the default slices ran those round trips
+    # one after another (about 0.2 s each, most of a staging's cost).
+    rdd = spark.sparkContext.parallelize(rows, 1)
+    spark.createDataFrame(rdd, schema).write.mode("overwrite").parquet(path)
     return path
 
 

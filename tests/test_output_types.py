@@ -37,7 +37,8 @@ def test_no_query_outputs_decimal_or_nested(spark, sf_dir):
     # g9/g15/g17 share one write-once staging behind a tableExists check
     # (check-then-act): build one of them serially so the staging exists
     # before the pool can race on it. Every other build-time writer uses
-    # a per-query table name.
+    # a per-query table name. A rename must fail here, not drop the guard.
+    assert "g9_triangle_count_bucketed" in names
     schemas = [schema_of(n) for n in names if n == "g9_triangle_count_bucketed"]
     rest = [n for n in names if n != "g9_triangle_count_bucketed"]
 

@@ -1,0 +1,84 @@
+"""One stream-replay primitive (streaming/replay.py): registry builders
+neither set session conf nor hand-roll the availableNow run, and the
+replays that pin their own shuffle partitions do so on a child session, so
+concurrent builds leave the caller's session exactly as they found it."""
+
+from __future__ import annotations
+
+import os
+import re
+from concurrent.futures import ThreadPoolExecutor
+
+import __spark_entry__ as entrymod
+from a_big_data_lambda_architecture_for_real_time_stock_price_forecasting_using_financial_news_spark import (
+    plans,
+    streaming,
+)
+from a_big_data_lambda_architecture_for_real_time_stock_price_forecasting_using_financial_news_spark.streaming import (
+    replay,
+)
+
+PINNED = [
+    "t11_stream_stream_join",
+    "t13_stream_dedup",
+    "t15_stream_windowed_topk",
+    "t16_stream_dedup_within_watermark",
+]
+PARTS = "spark.sql.shuffle.partitions"
+
+
+def _sources(pkg):
+    root = os.path.dirname(pkg.__file__)
+    for dirpath, _, files in os.walk(root):
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(dirpath, f)
+                with open(path) as fh:
+                    yield path, fh.read()
+
+
+def test_no_builder_sets_shuffle_partitions_or_runs_its_own_trigger():
+    conf_set = re.compile(r"conf\.set\(\s*[\"']spark\.sql\.shuffle\.partitions")
+    trigger = re.compile(r"trigger\(\s*availableNow\s*=\s*True\s*\)")
+    offenders = []
+    for pkg in (plans, streaming):
+        for path, src in _sources(pkg):
+            # the child session isolated_session() creates is the one
+            # session a replay may pin
+            if path == replay.__file__:
+                continue
+            if conf_set.search(src):
+                offenders.append(f"{path}: sets {PARTS}")
+            if pkg is plans and trigger.search(src):
+                offenders.append(f"{path}: runs its own availableNow trigger")
+    assert not offenders, offenders
+
+
+def test_isolated_session_copies_runtime_conf_and_pins_partitions(spark):
+    # a runtime value that differs from the SparkConf default, which a
+    # bare newSession() would fall back to
+    parent = spark.newSession()
+    parent.conf.set("spark.sql.session.timeZone", "America/New_York")
+    parent.conf.set(PARTS, "7")
+    child = replay.isolated_session(parent)
+    assert child.conf.get("spark.sql.session.timeZone") == "America/New_York"
+    assert child.conf.get(PARTS) == replay.REPLAY_SHUFFLE_PARTITIONS
+    assert parent.conf.get(PARTS) == "7"
+
+
+def test_pinned_replays_build_concurrently_without_touching_the_session(spark, sf_dir):
+    qs = entrymod.queries()
+
+    def sink_views():
+        return {t.name for t in spark.catalog.listTables() if "_sink_" in t.name}
+
+    def rows(name):
+        return sorted(map(tuple, qs[name](spark, sf_dir).collect()))
+
+    parts, views = spark.conf.get(PARTS), sink_views()
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        concurrent = dict(zip(PINNED, pool.map(rows, PINNED)))
+    assert spark.conf.get(PARTS) == parts
+    assert sink_views() == views
+    for name in PINNED:
+        assert concurrent[name] == rows(name), name
