@@ -10,7 +10,7 @@ from ..ext import export as _ex
 from ..ext import text as _tx
 from ..ext.hashing import phash60, phash60_sql
 from ..session import prepare
-from ..streaming.replay import run_foreach_batch
+from ..streaming.replay import run_foreach_batch, staged_stream
 from pyspark.sql import functions as F
 from .registry_base import ORACLES, register, scratch_dir, tbl
 from .registry_corpus import _cooccur_graph_bucketed, _split_col, _split_sql
@@ -1114,7 +1114,7 @@ def t25_stream_bitmap_view(spark, sf_dir):
     _tag, scratch = scratch_dir("spark_graft_speedview", sf_dir)
     root = _os.path.join(scratch, "bmmv_" + uuid.uuid4().hex[:8])
     stage = _os.path.join(root, "feed")
-    feed.repartitionByRange(3, "event_id").write.mode("overwrite").parquet(stage)
+    stream = staged_stream(feed, stage, 3, "event_id")
     view = KeyedParquetView(
         spark,
         _os.path.join(root, "mv"),
@@ -1146,9 +1146,7 @@ def t25_stream_bitmap_view(spark, sf_dir):
         )
 
     run_foreach_batch(
-        spark.readStream.schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage),
+        stream,
         lambda b, bid: view.merge_custom(b, fn, batch_id=bid, writer="bm"),
         _os.path.join(root, "ckpt"),
     )
@@ -1698,7 +1696,7 @@ def t26_stream_kmv_view(spark, sf_dir):
     _tag, scratch = scratch_dir("spark_graft_speedview", sf_dir)
     root = _os.path.join(scratch, "kmvmv_" + uuid.uuid4().hex[:8])
     stage = _os.path.join(root, "feed")
-    feed.repartitionByRange(3, "event_id").write.mode("overwrite").parquet(stage)
+    stream = staged_stream(feed, stage, 3, "event_id")
     view = KeyedParquetView(
         spark,
         _os.path.join(root, "mv"),
@@ -1721,9 +1719,7 @@ def t26_stream_kmv_view(spark, sf_dir):
         return topk(cur.select("event_type", "h").unionByName(delta).distinct())
 
     run_foreach_batch(
-        spark.readStream.schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage),
+        stream,
         lambda b, bid: view.merge_custom(b, fn, batch_id=bid, writer="kmv"),
         _os.path.join(root, "ckpt"),
     )

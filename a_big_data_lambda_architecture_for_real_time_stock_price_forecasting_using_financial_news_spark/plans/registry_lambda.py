@@ -12,7 +12,7 @@ from ..ext import text as _tx
 from ..ml import infer as _inf
 from ..plans.batch_pipeline import DEFAULT_AS_OF, build_batch_view, flagship, parse_props
 from ..session import prepare
-from ..streaming.replay import run_foreach_batch
+from ..streaming.replay import run_foreach_batch, staged_stream
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from .registry_base import DEC, bucket_count, dec2dbl, register, scratch_dir, tbl
@@ -80,10 +80,10 @@ def t17_lambda_convergence(spark, sf_dir):
     ``merge_incremental_mean``) the convergence is exact by construction,
     and this entry makes it a driver-checked fact.
 
-    Mechanics: the events fixture is replayed as 3 micro-batches per
-    stream (``maxFilesPerTrigger=1``; chunks split by event_id range, so
-    days straddle batch boundaries and the merges genuinely combine
-    partial days). Each stream is a ``foreachBatch`` sink with its own
+    Mechanics: the events fixture is staged once as 3 event_id-range
+    chunks and replayed one chunk per micro-batch by each leg (days
+    straddle batch boundaries, so the merges genuinely combine partial
+    days). Each leg is a ``foreachBatch`` sink with its own
     checkpoint; per-writer batch-id watermarks make replays idempotent
     (tests restart mid-replay from the checkpoint). Scale shape: each
     merge is a full-outer join pruned to the partitions (days) the batch
@@ -104,9 +104,10 @@ def t17_lambda_convergence(spark, sf_dir):
     root = _os.path.join(scratch, uuid.uuid4().hex[:8])
     view = KeyedParquetView(spark, _os.path.join(root, "speed_view"), ["event_date"])
 
-    stock_stream = events_stream(spark, sf_dir, n_chunks=3).filter(
-        F.col("event_type") == "purchase"
-    )
+    # one staged feed, filtered per leg; each leg is its own query with its
+    # own checkpoint, so each replays every chunk
+    events = events_stream(spark, sf_dir, n_chunks=3)
+    stock_stream = events.filter(F.col("event_type") == "purchase")
 
     def stock_sink(batch_df, batch_id):
         view.merge_daily_ohlc(
@@ -115,10 +116,8 @@ def t17_lambda_convergence(spark, sf_dir):
 
     run_foreach_batch(stock_stream, stock_sink, _os.path.join(root, "ckpt_stock"))
 
-    news_stream = (
-        events_stream(spark, sf_dir, n_chunks=3)
-        .filter(F.col("event_type") != "purchase")
-        .withColumn("k", F.from_json(F.col("props").cast("string"), EVENT_PROPS)["k"])
+    news_stream = events.filter(F.col("event_type") != "purchase").withColumn(
+        "k", F.from_json(F.col("props").cast("string"), EVENT_PROPS)["k"]
     )
 
     def news_sink(batch_df, batch_id):
@@ -848,8 +847,7 @@ def t18_stream_scd2(spark, sf_dir):
     )
     _tag, scratch = scratch_dir("spark_graft_speedview", sf_dir)
     root = _os.path.join(scratch, "scd2_" + uuid.uuid4().hex[:8])
-    stage = _os.path.join(root, "changes")
-    changes.repartitionByRange(3, "o_orderkey").write.mode("overwrite").parquet(stage)
+    stream = staged_stream(changes, _os.path.join(root, "changes"), 3, "o_orderkey")
     view = KeyedParquetView(spark, _os.path.join(root, "dim"), ["custkey"], partition_by="pb")
 
     RAW = ["custkey", "o_orderkey", "o_orderdate", "priority", "price_cents", "pb"]
@@ -868,13 +866,7 @@ def t18_stream_scd2(spark, sf_dir):
         b = batch_df.withColumn("pb", F.pmod(F.col("custkey"), F.lit(16)))
         view.merge_custom(b, fn, batch_id=batch_id, writer="scd2")
 
-    run_foreach_batch(
-        spark.readStream.schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage),
-        sink,
-        _os.path.join(root, "ckpt"),
-    )
+    run_foreach_batch(stream, sink, _os.path.join(root, "ckpt"))
     dim = view.read()
     if dim is None:
         # no order matched the tracked-customer predicate (possible on a
@@ -1605,8 +1597,7 @@ def t20_stream_agg_view(spark, sf_dir):
     )
     _tag, scratch = scratch_dir("spark_graft_speedview", sf_dir)
     root = _os.path.join(scratch, "aggmv_" + uuid.uuid4().hex[:8])
-    stage = _os.path.join(root, "feed")
-    feed.repartitionByRange(3, "o_orderkey").write.mode("overwrite").parquet(stage)
+    stream = staged_stream(feed, _os.path.join(root, "feed"), 3, "o_orderkey")
     view = KeyedParquetView(spark, _os.path.join(root, "mv"), ["ym", "priority"], partition_by="pb")
 
     def fn(cur, b):
@@ -1638,13 +1629,7 @@ def t20_stream_agg_view(spark, sf_dir):
         b = batch_df.withColumn("pb", F.pmod(F.xxhash64("ym"), F.lit(8)))
         view.merge_custom(b, fn, batch_id=batch_id, writer="aggmv")
 
-    run_foreach_batch(
-        spark.readStream.schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage),
-        sink,
-        _os.path.join(root, "ckpt"),
-    )
+    run_foreach_batch(stream, sink, _os.path.join(root, "ckpt"))
     return view.read().select(
         "ym",
         "priority",

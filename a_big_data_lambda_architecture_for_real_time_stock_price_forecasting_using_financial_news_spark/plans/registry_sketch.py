@@ -13,7 +13,7 @@ from ..ext import similarity as _sim2
 from ..ext import text as _tx
 from ..ml import infer as _inf
 from ..session import prepare
-from ..streaming.replay import run_foreach_batch
+from ..streaming.replay import run_foreach_batch, staged_stream
 from pyspark.sql import functions as F
 from .registry_base import DEC, ORACLES, dec2dbl, register, scratch_dir, tbl
 from .registry_corpus import _cooccur_graph_bucketed
@@ -514,7 +514,7 @@ def t22_stream_hll_view(spark, sf_dir):
     _tag, scratch = scratch_dir("spark_graft_speedview", sf_dir)
     root = _os.path.join(scratch, "hllmv_" + uuid.uuid4().hex[:8])
     stage = _os.path.join(root, "feed")
-    feed.repartitionByRange(3, "event_id").write.mode("overwrite").parquet(stage)
+    stream = staged_stream(feed, stage, 3, "event_id")
     view = KeyedParquetView(
         spark, _os.path.join(root, "mv"), ["event_type", "r"], partition_by="event_type"
     )
@@ -538,9 +538,7 @@ def t22_stream_hll_view(spark, sf_dir):
         )
 
     run_foreach_batch(
-        spark.readStream.schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage),
+        stream,
         lambda b, bid: view.merge_custom(b, fn, batch_id=bid, writer="hll"),
         _os.path.join(root, "ckpt"),
     )
@@ -1572,7 +1570,7 @@ def t23_stream_cms_view(spark, sf_dir):
     _tag, scratch = scratch_dir("spark_graft_speedview", sf_dir)
     root = _os.path.join(scratch, "cmsmv_" + uuid.uuid4().hex[:8])
     stage = _os.path.join(root, "feed")
-    feed.repartitionByRange(3, "event_id").write.mode("overwrite").parquet(stage)
+    stream = staged_stream(feed, stage, 3, "event_id")
     view = KeyedParquetView(spark, _os.path.join(root, "mv"), ["i", "col"], partition_by="i")
 
     def expand(df):
@@ -1614,9 +1612,7 @@ def t23_stream_cms_view(spark, sf_dir):
         )
 
     run_foreach_batch(
-        spark.readStream.schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage),
+        stream,
         lambda b, bid: view.merge_custom(expand(b), fn, batch_id=bid, writer="cms"),
         _os.path.join(root, "ckpt"),
     )
@@ -2822,8 +2818,7 @@ def t24_stream_erasure(spark, sf_dir):
         .select((F.col("user_id") % 16).alias("ub"), "user_id")
         .distinct()
     )
-    stage = _os.path.join(root, "requests")
-    victims.repartitionByRange(2, "user_id").write.mode("overwrite").parquet(stage)
+    stream = staged_stream(victims, _os.path.join(root, "requests"), 2, "user_id")
 
     def erase(cur, b):
         if cur is None:
@@ -2832,9 +2827,7 @@ def t24_stream_erasure(spark, sf_dir):
         return cur.join(gone, "user_id", "left_anti")
 
     run_foreach_batch(
-        spark.readStream.schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage),
+        stream,
         lambda b, bid: view.merge_custom(b, erase, batch_id=bid, writer="erase"),
         _os.path.join(root, "ckpt"),
     )

@@ -205,8 +205,8 @@ def t10_stream_topk(spark, sf_dir):
     from ..streaming.ingest import events_stream
     from ..streaming.state import running_topk_stream
 
-    prepare(spark)
-    stream = events_stream(spark, sf_dir).select(
+    child = isolated_session(prepare(spark))
+    stream = events_stream(child, sf_dir).select(
         F.col("user_id").cast("string").alias("key"),
         F.col("value").cast("double").alias("v"),
     )
@@ -245,8 +245,8 @@ def t6_stream_running_mean(spark, sf_dir):
     from ..streaming.ingest import events_stream
     from ..streaming.state import running_mean_stream
 
-    prepare(spark)
-    stream = _pp(events_stream(spark, sf_dir)).select(
+    child = isolated_session(prepare(spark))
+    stream = _pp(events_stream(child, sf_dir)).select(
         F.col("user_id").cast("string").alias("key"),
         F.col("k").cast("double").alias("v"),
     )
@@ -334,12 +334,10 @@ def t12_stream_static_join(spark, sf_dir):
     state store."""
     from ..streaming.ingest import events_stream
 
-    prepare(spark)
-    cust = tbl(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_mktsegment"
-    )
+    child = isolated_session(prepare(spark))
+    cust = tbl(child, sf_dir, "customer").select("c_custkey", "c_name", "c_mktsegment")
     enriched = (
-        events_stream(spark, sf_dir, n_chunks=2)
+        events_stream(child, sf_dir, n_chunks=2)
         .select("event_id", "user_id")
         .join(cust, F.col("user_id") + 1 == F.col("c_custkey"))
         .select("event_id", "user_id", "c_name", "c_mktsegment")
@@ -406,9 +404,9 @@ def t14_stream_state_expiry(spark, sf_dir):
     from ..streaming.ingest import events_stream
     from ..streaming.state import idle_session_close
 
-    prepare(spark)
+    child = isolated_session(prepare(spark))
     stream = (
-        events_stream(spark, sf_dir, single_batch=True)
+        events_stream(child, sf_dir, single_batch=True)
         .select(
             F.col("user_id").cast("string").alias("key"),
             F.col("ts"),

@@ -12,7 +12,7 @@ from ..ext import similarity as _sim
 from ..ext import text as _tx
 from ..ext.hashing import phash60, phash60_sql
 from ..session import prepare
-from ..streaming.replay import run_foreach_batch
+from ..streaming.replay import run_foreach_batch, staged_stream
 from pyspark.sql import functions as F
 from .registry_base import DEC, register, scratch_dir, tbl
 from .registry_corpus import _split_col, _split_sql
@@ -777,8 +777,7 @@ def t27_stream_gram_view(spark, sf_dir):
     emb = tbl(spark, sf_dir, "embeddings")
     _tag, scratch = scratch_dir("spark_graft_speedview", sf_dir)
     root = _os.path.join(scratch, "gram_" + uuid.uuid4().hex[:8])
-    stage = _os.path.join(root, "feed")
-    emb.repartitionByRange(3, "vec_id").write.mode("overwrite").parquet(stage)
+    stream = staged_stream(emb, _os.path.join(root, "feed"), 3, "vec_id")
     view = KeyedParquetView(spark, _os.path.join(root, "mv"), ["i", "j"], partition_by="pb")
 
     def batch_gram(b):
@@ -854,13 +853,7 @@ def t27_stream_gram_view(spark, sf_dir):
         )
         view.merge_custom(g, fn, batch_id=batch_id, writer="grammv")
 
-    run_foreach_batch(
-        spark.readStream.schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage),
-        sink,
-        _os.path.join(root, "ckpt"),
-    )
+    run_foreach_batch(stream, sink, _os.path.join(root, "ckpt"))
     return view.read().select("i", "j", "dot")
 
 
@@ -1729,8 +1722,7 @@ def t28_stream_histogram_view(spark, sf_dir):
     )
     _tag, scratch = scratch_dir("spark_graft_speedview", sf_dir)
     root = _os.path.join(scratch, "histmv_" + uuid.uuid4().hex[:8])
-    stage = _os.path.join(root, "feed")
-    feed.repartitionByRange(3, "event_id").write.mode("overwrite").parquet(stage)
+    stream = staged_stream(feed, _os.path.join(root, "feed"), 3, "event_id")
     view = KeyedParquetView(
         spark,
         _os.path.join(root, "mv"),
@@ -1760,9 +1752,7 @@ def t28_stream_histogram_view(spark, sf_dir):
         )
 
     run_foreach_batch(
-        spark.readStream.schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage),
+        stream,
         lambda b, bid: view.merge_custom(b, fn, batch_id=bid, writer="hist"),
         _os.path.join(root, "ckpt"),
     )
@@ -1844,8 +1834,7 @@ def t29_stream_minhash_view(spark, sf_dir):
     feed = d.select("doc_id", "source", "text")
     _tag, scratch = scratch_dir("spark_graft_speedview", sf_dir)
     root = _os.path.join(scratch, "mhmv_" + uuid.uuid4().hex[:8])
-    stage = _os.path.join(root, "feed")
-    feed.repartitionByRange(3, "doc_id").write.mode("overwrite").parquet(stage)
+    stream = staged_stream(feed, _os.path.join(root, "feed"), 3, "doc_id")
     view = KeyedParquetView(
         spark,
         _os.path.join(root, "mv"),
@@ -1887,9 +1876,7 @@ def t29_stream_minhash_view(spark, sf_dir):
         )
 
     run_foreach_batch(
-        spark.readStream.schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage),
+        stream,
         lambda b, bid: view.merge_custom(b, fn, batch_id=bid, writer="mh"),
         _os.path.join(root, "ckpt"),
     )
@@ -2676,8 +2663,7 @@ def t30_stream_substring_view(spark, sf_dir):
     docs = tbl(spark, sf_dir, "documents")
     _tag, scratch = scratch_dir("spark_graft_speedview", sf_dir)
     root = _os.path.join(scratch, "ssv_" + uuid.uuid4().hex[:8])
-    stage = _os.path.join(root, "feed")
-    docs.repartitionByRange(3, "doc_id").write.mode("overwrite").parquet(stage)
+    stream = staged_stream(docs, _os.path.join(root, "feed"), 3, "doc_id")
     fps_v = KeyedParquetView(
         spark, _os.path.join(root, "fps"), ["doc_id", "cidx"], partition_by="pb"
     )
@@ -2753,13 +2739,7 @@ def t30_stream_substring_view(spark, sf_dir):
         delta.unpersist()
         new_fps.unpersist()
 
-    run_foreach_batch(
-        spark.readStream.schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage),
-        sink,
-        _os.path.join(root, "ckpt"),
-    )
+    run_foreach_batch(stream, sink, _os.path.join(root, "ckpt"))
     final = spans_v.read()
     out_cols = ["doc_a", "doc_b", "start_a", "start_b", "n_chunks", "span_toks"]
     if final is None:
@@ -2815,14 +2795,13 @@ def t31_stream_semdedup_view(spark, sf_dir):
     emb = tbl(spark, sf_dir, "embeddings")
     _tag, scratch = scratch_dir("spark_graft_speedview", sf_dir)
     root = _os.path.join(scratch, "ssv31_" + uuid.uuid4().hex[:8])
-    stage = _os.path.join(root, "feed")
     cdir = _os.path.join(root, "cents")
     # the frozen snapshot: train on the %3==0 subset once, store, reload
     train = emb.filter(F.col("vec_id") % 3 == 0).filter(
         _sim._nonzero_vec("embedding")
     )
     _sim.train_kmeans_centroids(train).write.mode("overwrite").parquet(cdir)
-    emb.repartitionByRange(3, "vec_id").write.mode("overwrite").parquet(stage)
+    stream = staged_stream(emb, _os.path.join(root, "feed"), 3, "vec_id")
     cells_v = KeyedParquetView(
         spark, _os.path.join(root, "cells"), ["vec_id"], partition_by="pb"
     )
@@ -2880,13 +2859,7 @@ def t31_stream_semdedup_view(spark, sf_dir):
         )
         new_cells.unpersist()
 
-    run_foreach_batch(
-        spark.readStream.schema(spark.read.parquet(stage).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage),
-        sink,
-        _os.path.join(root, "ckpt"),
-    )
+    run_foreach_batch(stream, sink, _os.path.join(root, "ckpt"))
     cells = cells_v.read()
     if cells is None:
         return spark.createDataFrame(

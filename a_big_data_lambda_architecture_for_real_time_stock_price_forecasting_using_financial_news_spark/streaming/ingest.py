@@ -6,8 +6,9 @@ The reference's five streaming jobs all share one shape (e.g.
     readStream kafka → selectExpr CAST(value AS STRING)
     → from_json(value, schema) → select("data.*")
 
-Kept verbatim for Kafka; tests and the correctness driver use file sources
-(json/parquet) with ``trigger(availableNow=True)`` so replay is hermetic.
+Kept verbatim for Kafka; tests and the correctness driver replay parquet
+files instead (:func:`events_stream`, ``streaming/replay.py``) so replay is
+hermetic.
 ``failOnDataLoss=false`` (T4) mirrors the reference's loss tolerance.
 """
 
@@ -16,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .replay import staged_stream
 
 
 def kafka_stream(
@@ -45,21 +48,6 @@ def parse_json_value(raw: DataFrame, schema: T.StructType, value_col: str = "val
     )
 
 
-def json_file_stream(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    """Hermetic replacement for a Kafka topic: a directory of JSON files
-    replayed as micro-batches (one file ≈ one batch with
-    ``maxFilesPerTrigger=1``)."""
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(path)
-    )
-
-
-def parquet_stream(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    return spark.readStream.schema(schema).parquet(path)
-
-
 def events_stream(
     spark: SparkSession,
     sf_dir: str,
@@ -73,11 +61,11 @@ def events_stream(
 
     The parquet streaming source requires a *directory*; the fixture is one
     file, so it is symlinked into a temp dir. With ``n_chunks > 1`` the data
-    is re-written as ``n_chunks`` files so ``maxFilesPerTrigger=1`` replays
-    it as that many micro-batches (multi-batch state tests).
-    ``single_batch=True`` drops maxFilesPerTrigger so availableNow consumes
-    every file in ONE data batch regardless of the fixture's file layout —
-    required by consumers whose determinism contract is
+    is staged as ``n_chunks`` range chunks of ``chunk_by`` that replay as
+    that many micro-batches, in range order (``replay.staged_stream``).
+    ``single_batch=True`` (unchunked feeds only) drops maxFilesPerTrigger
+    so availableNow consumes every file in ONE data batch regardless of the
+    fixture's file layout — required by consumers whose determinism contract is
     one-data-batch-then-watermark-flush (t14).
 
     ``sentinel_events=True`` appends a FINAL micro-batch file holding TWO
@@ -123,7 +111,31 @@ def events_stream(
     # couple hundred MB per call — the same orphan class as the bucketed
     # staging dirs (r6 judge finding), cleaned the same way
     atexit.register(shutil.rmtree, stage, ignore_errors=True)
-    if n_chunks <= 1:
+    schema = T.StructType(
+        [
+            T.StructField("event_id", T.LongType()),
+            T.StructField("ts", ts_type),
+            T.StructField("user_id", T.LongType()),
+            T.StructField("event_type", T.StringType()),
+            T.StructField("value", T.DoubleType()),
+            T.StructField("props", T.StringType()),
+        ]
+    )
+    if n_chunks > 1:
+        # chunk_by="event_id" (default) replays in arrival order — fine for
+        # watermark-free consumers (Option A merges tolerate any order).
+        # Watermarked consumers (t21's Option B) must chunk by "ts": the
+        # sf1 generator interleaves replicas, so event_id spans the whole
+        # month per chunk and a watermark would late-drop chunks 2..n
+        # wholesale. Range-partitioning on ts bounds replay disorder to
+        # within-chunk — the Kafka-log-is-roughly-time-ordered model.
+        raw = staged_stream(
+            spark.read.parquet(src).select(*schema.fieldNames()),
+            stage,
+            n_chunks,
+            chunk_by,
+        )
+    else:
         if os.path.isdir(src):  # directory of part files: link each
             for i, f in enumerate(sorted(os.listdir(src))):
                 if f.endswith(".parquet"):
@@ -133,32 +145,10 @@ def events_stream(
                     )
         else:
             os.symlink(os.path.abspath(src), os.path.join(stage, "part-0.parquet"))
-    else:
-        # chunk_by="event_id" (default) replays in arrival order — fine for
-        # watermark-free consumers (Option A merges tolerate any order).
-        # Watermarked consumers (t21's Option B) must chunk by "ts": the
-        # sf1 generator interleaves replicas, so event_id spans the whole
-        # month per chunk and a watermark would late-drop chunks 2..n
-        # wholesale. Range-partitioning on ts bounds replay disorder to
-        # within-chunk — the Kafka-log-is-roughly-time-ordered model.
-        spark.read.parquet(src).repartitionByRange(n_chunks, chunk_by).write.mode(
-            "overwrite"
-        ).parquet(stage)
-        # FileStreamSource replays oldest-mtime-first, but the chunk part
-        # files are written CONCURRENTLY, so their mtimes race: a run that
-        # lists chunk 2 before chunk 1 advances the watermark a whole chunk
-        # early and every watermarked consumer silently late-drops chunk
-        # 1's days (measured: the t21 Option-B join lost days 1-9 on ~half
-        # of runs). Pinning strictly increasing mtimes in part-file name
-        # order (= range order of chunk_by) makes the replay order — and
-        # thus watermark advancement — deterministic.
-        import time as _time
-
-        base_t = _time.time() - n_chunks - 1
-        for i, f in enumerate(
-            sorted(x for x in os.listdir(stage) if x.endswith(".parquet"))
-        ):
-            os.utime(os.path.join(stage, f), (base_t + i, base_t + i))
+        reader = spark.readStream.schema(schema)
+        if not single_batch:
+            reader = reader.option("maxFilesPerTrigger", 1)
+        raw = reader.parquet(stage)
     if sentinel_events:
         import time as _time
 
@@ -212,20 +202,6 @@ def events_stream(
         for f in set(os.listdir(stage)) - before:
             if f.endswith(".parquet"):
                 os.utime(os.path.join(stage, f), (t_last, t_last))
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    reader = spark.readStream.schema(schema)
-    if not single_batch:
-        reader = reader.option("maxFilesPerTrigger", 1)
-    raw = reader.parquet(stage)
     if isinstance(ts_type, T.LongType):
         raw = raw.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
     elif isinstance(ts_type, T.TimestampNTZType):

@@ -63,6 +63,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .replay import run_to_files
+
 DEC = "decimal(18,2)"
 
 #: stage-1 output schema, shared by both writers and the stage-2 readers.
@@ -138,26 +140,6 @@ def day_state_stream(leg: str, events: DataFrame) -> DataFrame:
         else:
             cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
     return agg.select(*cols)
-
-
-def run_day_state_stage(
-    spark: SparkSession, leg: str, events: DataFrame, out_dir: str, ckpt_dir: str
-) -> None:
-    """Run stage 1 to completion (availableNow) with an exactly-once
-    parquet sink. One extra restart drains the no-data flush batch that
-    finalizes the last closed windows — idempotent via the checkpoint,
-    so a restart that has nothing to add commits nothing."""
-    df = day_state_stream(leg, events)
-    for _ in range(2):
-        q = (
-            df.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
 
 #: far-future punctuation day (filtered out of all results by date bound)
@@ -267,22 +249,13 @@ def run_speed_view_join(
 ) -> DataFrame:
     """Run stage 2 to completion and return the materialized speed view.
 
-    Two availableNow passes: the first matches and emits every paired
-    day; the second run's no-data batch advances eviction so singles
-    past the watermark flush as NULL-padded rows. Exactly-once via the
-    checkpointed parquet sink. The sentinel day is dropped here — its
-    only purpose was to close the watermark."""
+    Two passes (:func:`~.replay.run_to_files`): the first matches and
+    emits every paired day; the second run's no-data batch advances
+    eviction so singles past the watermark flush as NULL-padded rows.
+    The sentinel day is dropped here — its only purpose was to close the
+    watermark."""
     df = speed_view_stream_join(spark, stock_dir, news_dir, delay=delay)
-    for _ in range(2):
-        q = (
-            df.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_to_files(df, out_dir, ckpt_dir)
     return spark.read.schema(df.schema).parquet(out_dir).filter(
         F.col("event_date") < F.to_date(F.lit(SENTINEL_DATE))
     )
@@ -315,24 +288,23 @@ def lambda_speed_view_option_b(
     # windows at all and the join would lose both-halves days the batch
     # oracle keeps (r10 fuzz catch; invisible on the dense fixture where
     # only the excluded DEFAULT_AS_OF day stays open).
-    stock_events = events_stream(
+    # One staged feed, filtered per leg: each leg runs as its own query
+    # with its own checkpoint, so each replays the same files in full.
+    events = events_stream(
         spark, sf_dir, n_chunks=n_chunks, chunk_by="ts", sentinel_events=True
-    ).filter(F.col("event_type") == "purchase")
-    news_events = (
-        events_stream(
-            spark, sf_dir, n_chunks=n_chunks, chunk_by="ts", sentinel_events=True
-        )
-        .filter(F.col("event_type") != "purchase")
-        .withColumn("k", F.from_json(F.col("props").cast("string"), EVENT_PROPS)["k"])
+    )
+    stock_events = events.filter(F.col("event_type") == "purchase")
+    news_events = events.filter(F.col("event_type") != "purchase").withColumn(
+        "k", F.from_json(F.col("props").cast("string"), EVENT_PROPS)["k"]
     )
     stock_dir = os.path.join(root, "stock_days")
     news_dir = os.path.join(root, "news_days")
-    run_day_state_stage(
-        spark, "stock", stock_events, stock_dir, os.path.join(root, "ckpt_stock")
-    )
-    run_day_state_stage(
-        spark, "news", news_events, news_dir, os.path.join(root, "ckpt_news")
-    )
+    # stage 1 per leg, into an exactly-once parquet sink; the second pass of
+    # run_to_files finalizes the last closed windows
+    legs = {"stock": (stock_events, stock_dir), "news": (news_events, news_dir)}
+    for leg, (ev, out_dir) in legs.items():
+        ckpt = os.path.join(root, f"ckpt_{leg}")
+        run_to_files(day_state_stream(leg, ev), out_dir, ckpt)
     # No append_sentinel here (r11 finding): the day-state dirs are
     # STREAMING file sinks, and FileStreamSource honors their
     # _spark_metadata log — a batch-appended punctuation file is

@@ -4,10 +4,11 @@ Every streaming registry entry replays a bounded source with
 ``trigger(availableNow=True)``: Spark runs it as an ordinary incremental
 query over everything present at start, in as many micro-batches as the
 source's rate limits ask for, then stops (Structured Streaming, SIGMOD
-2018). The two runners below start such a query, wait for it and hand back
-its result, so no builder writes the trigger/start/await sequence itself.
-(``streaming/join.py`` keeps its own runs: they write parquet file sinks,
-a sink kind no builder uses directly.)
+2018). :func:`staged_stream` turns a batch DataFrame into such a source, a
+directory of range-ordered parquet chunks replayed one file per
+micro-batch; the runners below start a query over it, wait for it and hand
+back its result, so no builder writes the read or the trigger/start/await
+sequence itself.
 
 Builders never set session conf. A replay that needs its own shuffle
 partition count runs on :func:`isolated_session`, a child session whose conf
@@ -16,6 +17,8 @@ changes stay invisible to the caller's session and to concurrent builds.
 
 from __future__ import annotations
 
+import os
+import time
 import uuid
 from collections.abc import Callable
 
@@ -41,6 +44,32 @@ def isolated_session(spark: SparkSession) -> SparkSession:
             child.conf.set(key, value)
     child.conf.set("spark.sql.shuffle.partitions", REPLAY_SHUFFLE_PARTITIONS)
     return child
+
+
+def staged_stream(df: DataFrame, path: str, n_chunks: int, order_by: str) -> DataFrame:
+    """Write ``df`` under ``path`` as up to ``n_chunks`` parquet files
+    range-partitioned on ``order_by`` and return the ``maxFilesPerTrigger=1``
+    stream that replays them, one file per micro-batch, in range order.
+
+    FileStreamSource replays oldest-mtime-first, but the chunk files are
+    written concurrently, so their mtimes race (and often tie to the
+    millisecond): a run that lists chunk 2 before chunk 1 replays a
+    different batch sequence, and a watermarked consumer advances its
+    watermark a whole chunk early and late-drops chunk 1 (measured: the t21
+    Option-B join lost days 1-9 on about half of runs). Pinning strictly
+    increasing mtimes in part-file name order, which is range order, makes
+    the batch sequence the same on every run."""
+    df.repartitionByRange(n_chunks, order_by).write.mode("overwrite").parquet(path)
+    parts = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+    base_t = time.time() - len(parts) - 1
+    for i, f in enumerate(parts):
+        os.utime(os.path.join(path, f), (base_t + i, base_t + i))
+    spark = df.sparkSession
+    return (
+        spark.readStream.schema(spark.read.parquet(path).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(path)
+    )
 
 
 def run_to_memory(df: DataFrame, mode: str = "append") -> DataFrame:
@@ -72,3 +101,22 @@ def run_foreach_batch(
         .start()
     )
     q.awaitTermination()
+
+
+def run_to_files(df: DataFrame, path: str, checkpoint: str) -> None:
+    """Replay ``df`` to completion into an exactly-once parquet file sink
+    at ``path`` (append mode), twice from the same ``checkpoint``: the
+    second run's no-data batch finalizes the windows, or evicts the
+    outer-join state, that the first run's last watermark closed. The
+    checkpoint makes the extra run idempotent: with nothing to add it
+    commits nothing."""
+    for _ in range(2):
+        q = (
+            df.writeStream.format("parquet")
+            .option("path", path)
+            .option("checkpointLocation", checkpoint)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()

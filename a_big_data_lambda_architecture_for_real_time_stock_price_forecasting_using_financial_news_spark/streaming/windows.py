@@ -4,8 +4,8 @@ silently handled by ES keyed overwrite).
 
 All builders work on both batch and streaming DataFrames (Spark evaluates
 ``window``/``session_window`` in batch too), so the DuckDB oracle can check
-the batch evaluation while streaming tests replay the same data through
-``trigger(availableNow=True)``.
+the batch evaluation while streaming tests replay the same data as a bounded
+``availableNow`` stream.
 """
 
 from __future__ import annotations
