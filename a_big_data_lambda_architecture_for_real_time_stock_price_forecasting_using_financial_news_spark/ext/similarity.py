@@ -45,11 +45,15 @@ MAX_BROADCAST_QUERIES = 100_000
 def _serving_sized(queries: DataFrame, fn: str, limit: int | None = None) -> DataFrame:
     """Assert the query set honors the serving-sized broadcast contract.
 
-    The check scans at most ``limit + 1`` rows (limit + count, not a full
-    count), so its cost is bounded by the contract itself, and it fails
-    with the intended alternative named instead of an executor OOM."""
+    The check takes at most ``limit + 1`` zero-column rows, not a full
+    count, so its cost is bounded by the contract itself, and it fails
+    with the intended alternative named instead of an executor OOM.
+    ``take`` plans a CollectLimit, which is not code-generated. A
+    ``limit().count()`` would plan a Local/GlobalLimit pair whose counter
+    field Spark names from a JVM-global sequence, so every build would
+    compile two new classes (and run one more job)."""
     limit = MAX_BROADCAST_QUERIES if limit is None else limit
-    n = queries.limit(limit + 1).count()
+    n = len(queries.select().take(limit + 1))
     if n > limit:
         raise ValueError(
             f"{fn}: query set exceeds {limit} rows — the query side is "

@@ -292,15 +292,16 @@ def t11_stream_stream_join(spark, sf_dir):
     # per shuffle partition PER SIDE per micro-batch: replay on a child
     # session pinned to a small count
     child = isolated_session(prepare(spark))
+    # both sides read one staged copy: Spark plans it as one source, so
+    # each micro-batch feeds the same chunk to both sides
+    events = events_stream(child, sf_dir, n_chunks=2)
     clicks = (
-        events_stream(child, sf_dir, n_chunks=2)
-        .filter(F.col("event_type") == "click")
+        events.filter(F.col("event_type") == "click")
         .select("user_id", F.col("event_id").alias("click_id"), F.col("ts").alias("a_ts"))
         .withWatermark("a_ts", "3650 days")
     )
     views = (
-        events_stream(child, sf_dir, n_chunks=2)
-        .filter(F.col("event_type") == "view")
+        events.filter(F.col("event_type") == "view")
         .select(
             F.col("user_id").alias("v_user"),
             F.col("event_id").alias("view_id"),

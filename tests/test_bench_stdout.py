@@ -111,3 +111,29 @@ def test_bench_source_has_no_query_shed_path():
     assert "queries_truncated_to_slowest" not in src.replace(
         "`queries_truncated_to_slowest`", ""
     )
+
+
+def test_last_shed_tier_keeps_cpu_micro_sec_and_warns_on_stderr(capsys):
+    # 70 entries overflow the budget even after every metadata tier: the
+    # line still carries every query and the cross-round normalizer, and
+    # the overflow is reported on stderr, never as a second stdout line
+    doc = _doc(70, with_retry=True, with_warning=True)
+    line = bench.slim_for_stdout(doc, "BENCH_detail.json")
+    parsed = json.loads(line)
+    assert len(line) > 1800
+    assert len(parsed["queries"]) == 70
+    assert parsed["machine"] == {
+        "loadavg": [1.58, 5.11, 4.26],
+        "cpu_micro_sec": 0.4392,
+        "retried": True,
+    }
+    out = capsys.readouterr()
+    assert out.out == ""
+    assert "over the 1800-char budget" in out.err
+    assert str(len(line)) in out.err
+
+
+def test_line_within_budget_warns_nothing(capsys):
+    line = bench.slim_for_stdout(_doc(46, with_retry=True), "BENCH_detail.json")
+    assert len(line) <= 1800
+    assert capsys.readouterr() == ("", "")

@@ -146,6 +146,20 @@ def test_topk_rejects_corpus_sized_query_set(spark, monkeypatch):
     assert similarity.topk_bruteforce(emb, q, k=2).count() == 2
 
 
+def test_serving_size_check_reuses_its_generated_classes(spark, tmp_path):
+    """Every top-k build runs the query-set check, so a repeated check must
+    compile nothing: a generated limit names its counter field from a
+    JVM-global sequence, which made each check two new classes. (A parquet
+    source, because a range's known row count lets Catalyst drop the limit.)"""
+    cm = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    spark.range(0, 64, 1, 2).write.parquet(str(tmp_path / "q"))
+    q = spark.read.parquet(str(tmp_path / "q")).filter(F.col("id") % 3 == 0)
+    similarity._serving_sized(q, "topk_test")
+    before = cm.METRIC_COMPILATION_TIME().getCount()
+    assert similarity._serving_sized(q, "topk_test") is q
+    assert cm.METRIC_COMPILATION_TIME().getCount() == before
+
+
 def test_embedding_near_dup_within_cell(spark):
     out = similarity.embedding_near_dup(vec_df(spark), 0.99, cell_col="label")
     pairs = {(r.id_a, r.id_b) for r in out.collect()}
